@@ -156,7 +156,7 @@ def main() -> None:
     checks.append(("naive: broadcast join for term dfs", "BroadcastHashJoin" in plan, plan))
     checks.append(
         (
-            "naive: term IN filter pushed to flat postings scan",
+            "naive: term IN filter pushed to the segments scan",
             "PushedFilters: [In(term" in plan,
             plan,
         )

@@ -124,6 +124,45 @@ def test_pack_many_raw_equals_per_group_pack(groups):
 
 
 @given(
+    st.lists(
+        st.sets(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=300),
+        min_size=1,
+        max_size=12,
+    ),
+    st.booleans(),
+)
+@settings(max_examples=30, deadline=None)
+def test_decode_postings_column_inverts_pack_many_raw(doc_sets, large):
+    """The whole-column decoder (merge + the relational scorers' scan)
+    returns every row's (doc_id, tf, doc_len) in column order, for
+    (large_)binary columns and for a slice that starts past row 0."""
+    import pyarrow as pa
+
+    from uci_searchengine_spark.operators.codec import (
+        decode_postings_column,
+        pack_many_raw,
+    )
+
+    groups = [np.array(sorted(s), dtype=np.int64) for s in doc_sets]
+    doc_ids = np.concatenate(groups)
+    tfs = np.arange(doc_ids.size) % 7 + 1
+    dls = np.arange(doc_ids.size) % 300 + 10
+    starts = np.cumsum([0] + [g.size for g in groups[:-1]])
+    raw = pack_many_raw(doc_ids, tfs, dls, np.asarray(starts, dtype=np.int64), 120.0)
+    col = pa.Array.from_buffers(
+        pa.large_binary() if large else pa.binary(), len(groups),
+        [None,
+         pa.py_buffer(raw["group_bytes"].astype(np.int64 if large else np.int32)),
+         pa.py_buffer(raw["enc"])],
+    )
+    skip = groups[0].size
+    d, t, l = decode_postings_column(col.slice(1), raw["counts"][1:])
+    assert np.array_equal(d, doc_ids[skip:])
+    assert np.array_equal(t, tfs[skip:])
+    assert np.array_equal(l, dls[skip:])
+
+
+@given(
     st.sets(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=400),
     st.integers(min_value=1, max_value=8),
     st.integers(min_value=1, max_value=5),

@@ -125,6 +125,39 @@ class TestBuildDeterminism:
             is None
         )
 
+    def test_fast_resume_removes_leftover_flat_postings(
+        self, spark, tmp_path_factory
+    ):
+        """A kill between the meta.json commit and the removal of the
+        stage-1 flat postings leaves postings_flat/ behind: the next
+        build of the same snapshot removes it, still without any Spark
+        job."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from uci_searchengine_spark.operators.index_build import build_index
+
+        d = str(tmp_path_factory.mktemp("idx_leftover"))
+        self._build(spark, d, partitions=4, write_partitions=4)
+        flat = os.path.join(d, "postings_flat")
+        assert not os.path.exists(flat)
+        leftover = os.path.join(flat, "pshard=0", "part-x.parquet")
+        os.makedirs(os.path.dirname(leftover))
+        pq.write_table(pa.table({"term": ["stop0"]}), leftover)
+        tracker = spark.sparkContext._jsc.sc().statusTracker()
+        jobs_before = len(tracker.getJobIdsForGroup(None))
+        build_index(
+            spark,
+            None,
+            d,
+            num_shards=4,
+            n_buckets=4,
+            input_snapshot=f"synth:seed={SEED}:n={N}",
+            write_partitions=4,
+        )
+        assert len(tracker.getJobIdsForGroup(None)) == jobs_before
+        assert not os.path.exists(flat)
+
     def test_resume_skips_committed_and_is_bit_equal(self, spark, tmp_path_factory):
         from uci_searchengine_spark.operators.index_build import _read_manifest
 

@@ -108,10 +108,10 @@ class TestMerge:
             for (_, sa), (_, sb) in zip(a, b):
                 assert math.isclose(sa, sb, rel_tol=1e-9), (q, mode)
 
-    def test_merged_flat_plane(self, spark, tmp_path):
-        """The merged postings_flat plane agrees with the segments:
-        naive ≡ wand on the merged index, and the cold-path envelope's
-        match_count works."""
+    def test_merged_naive_equals_wand_and_cold_envelope(self, spark, tmp_path):
+        """On the merged index the relational scorer agrees with WAND
+        (naive ≡ wand), and the cold-path envelope's match_count agrees
+        with the resident Searcher."""
         from uci_searchengine_spark.operators.bm25 import (
             score_naive,
             search as cold_search,

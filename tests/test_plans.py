@@ -2,6 +2,8 @@
 depends on must stay visible in the plans (scripts/explain_audit.py is
 the human-readable version; this enforces the same checks in CI)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,6 +43,8 @@ class TestPlans:
         plan = _plan(score_naive(spark, index_small, "stop0 arbak", 10))
         assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
         assert "TakeOrderedAndProject" in plan
+        # the postings scan reads only the query terms' shard dirs
+        assert re.search(r"PartitionFilters: \[[^\]]*\bshard\b", plan)
 
     def test_revenue_join_broadcasts_and_pushes_filter(self, spark):
         from uci_searchengine_spark.entry_queries import q_revenue_topk

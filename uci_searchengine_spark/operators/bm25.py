@@ -4,7 +4,10 @@ The naive scorer is the Catalyst-planned fallback (SURVEY.md §2.6 T1):
 broadcast the query-term set, score with column arithmetic, aggregate,
 `orderBy(score desc, doc_id).limit(k)` → TakeOrderedAndProject. It exists
 as (a) the oracle-comparison path and (b) the always-correct baseline the
-block-max scorer (operators/wand.py) is verified against.
+block-max scorer (operators/wand.py) is verified against. Both read the
+one postings plane on disk, the compressed segments: the relational
+scorers here scan them through ``wand.decoded_postings`` as
+(term, doc_id, tf, doc_len) rows.
 
 Ranking contract (FIXTURES.md §6, replacing the reference's inconsistent
 TF-IDF — backend/app/api/search.py:91-100 vs crawler.py:457):
@@ -60,25 +63,10 @@ def idf(n_docs: int, df: int) -> float:
     return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
-def load_flat_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    from uci_searchengine_spark.operators.index_build import generation_dirs
-
-    out = None
-    for d in generation_dirs(index_dir):
-        p = os.path.join(d, "postings_flat")
-        if not os.path.isdir(p):
-            continue
-        # per-generation basePath: each generation is its own hive root
-        # (a multi-root read trips partition discovery)
-        df = spark.read.option("basePath", p).parquet(p)
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
 def score_naive(
     spark: SparkSession, index_dir: str, query: str, k: int = 10, mode: str = "or"
 ) -> DataFrame:
-    """Top-k (doc_id, score) via declarative ops over the flat postings.
+    """Top-k (doc_id, score) via declarative ops over the decoded postings.
 
     ``mode="and"`` keeps only docs holding EVERY query term — expressed
     as a HAVING count(distinct term) = n over the same aggregate (one
@@ -157,8 +145,9 @@ def score_all(
     )
     if not terms:
         return empty
-    flat = load_flat_postings(spark, index_dir)
-    matched = flat.filter(F.col("term").isin(terms))
+    from uci_searchengine_spark.operators.wand import decoded_postings
+
+    matched = decoded_postings(spark, index_dir, meta, terms)
     # df per query term — tiny aggregate over the already-filtered postings
     dfs = matched.groupBy("term").agg(F.count("*").alias("df"))
     matched = matched.join(F.broadcast(dfs), "term")
@@ -213,8 +202,10 @@ def match_count(
     holding EVERY term (same aggregate + a HAVING on the term count)."""
     if not terms:
         return 0
-    flat = load_flat_postings(spark, index_dir)
-    matched = _minus_tombstones(spark, flat.filter(F.col("term").isin(terms)), index_dir)
+    from uci_searchengine_spark.operators.wand import decoded_postings
+
+    posts = decoded_postings(spark, index_dir, IndexMeta.load(index_dir), terms)
+    matched = _minus_tombstones(spark, posts, index_dir)
     if mode == "and":
         return (
             matched.groupBy("doc_id")

@@ -104,6 +104,43 @@ def decode_varints(buf: bytes, offset: int = 0, count: int | None = None) -> np.
     return out
 
 
+def decode_binary_column(col, count: int) -> np.ndarray:
+    """Decode ``count`` varints straight out of a (large_)binary
+    column's Arrow value buffer — the buffer IS the concatenation of
+    every row's blob (each a whole number of varints), so one
+    vectorized ``decode_varints`` covers the whole column; no per-row
+    python, no per-row bytes objects."""
+    import pyarrow as pa
+
+    if count == 0:
+        return np.empty(0, dtype=np.uint64)
+    arr = col.chunk(0) if isinstance(col, pa.ChunkedArray) else col
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    voff = np.frombuffer(arr.buffers()[1], dtype=width)
+    start = int(voff[arr.offset])
+    return decode_varints(arr.buffers()[2], offset=start, count=count)
+
+
+def decode_postings_column(postings, df: np.ndarray):
+    """Whole-column inverse of the segment packers: a segment batch's
+    ``postings`` column (one blob per row) and its ``df`` column (postings
+    per row) → (doc_ids, tfs, doc_lens) int64 arrays, rows concatenated
+    in column order. One varint decode for the column, then a per-row
+    restart of the delta chain (each row's first gap is doc_id + 1)."""
+    df = np.asarray(df, dtype=np.int64)
+    vals = decode_binary_column(postings, 3 * int(df.sum()))
+    ids = undelta_runs(vals[0::3].astype(np.int64), df)
+    return ids, vals[1::3].astype(np.int64), vals[2::3].astype(np.int64)
+
+
+def undelta_runs(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Invert per-run delta coding over concatenated runs of ``counts``
+    values each: every run restarts its chain, first delta = value + 1."""
+    cs = np.cumsum(deltas)
+    starts = np.cumsum(counts) - counts
+    return cs - np.repeat(cs[starts] - deltas[starts], counts) - 1
+
+
 def bm25_tf_factor(tf: np.ndarray, doc_len: np.ndarray, avgdl: float) -> np.ndarray:
     """idf-independent BM25 factor tf/(tf + k1*(1-b+b*dl/avgdl)), float64."""
     tf = tf.astype(np.float64)
@@ -151,77 +188,6 @@ def pack_postings(
     return b"".join(chunks), block_max, offsets, block_last
 
 
-def pack_many(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    doc_lens: np.ndarray,
-    group_starts: np.ndarray,
-    avgdl: float,
-):
-    """Pack MANY posting lists at once — the batch-vectorized form of
-    :func:`pack_postings`.
-
-    Input: the concatenated postings of all groups (sorted by doc_id within
-    each group) plus ``group_starts`` (first row index of each group,
-    sorted, starting at 0). One varint encode covers the entire stream;
-    per-block maxima come from ``np.maximum.reduceat``; per-group blobs are
-    byte-range slices. Per-group Python shrinks to output assembly —
-    essential when a partition holds hundreds of thousands of rare-term
-    groups (per-group numpy overhead would dominate the build).
-
-    Returns (blobs list[bytes], block_max list[f32[]], block_offsets
-    list[i32[]], block_last list[i64[]], counts i64[]).
-    """
-    n = doc_ids.size
-    g = np.asarray(group_starts, dtype=np.int64)
-    counts = np.diff(np.append(g, n))
-
-    gaps = np.empty(n, dtype=np.uint64)
-    if n > 1:
-        gaps[1:] = np.diff(doc_ids).astype(np.uint64)
-    gaps[g] = (doc_ids[g] + 1).astype(np.uint64)
-    iv = np.empty(3 * n, dtype=np.uint64)
-    iv[0::3] = gaps
-    iv[1::3] = tfs.astype(np.uint64)
-    iv[2::3] = doc_lens.astype(np.uint64)
-    nbytes = _varint_lengths(iv)
-    enc = _varint_encode_core(iv, nbytes)
-    val_start = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-
-    # global block grid: blocks are contiguous within groups, groups are
-    # contiguous in the stream → block starts partition the whole array
-    nb_per_group = (counts + BLOCK_SIZE - 1) // BLOCK_SIZE
-    nb_per_group = np.maximum(nb_per_group, 1)
-    total_blocks = int(nb_per_group.sum())
-    rep_gstart = np.repeat(g, nb_per_group)
-    block_ord = np.arange(total_blocks, dtype=np.int64) - np.repeat(
-        np.concatenate(([0], np.cumsum(nb_per_group)[:-1])), nb_per_group
-    )
-    block_start = rep_gstart + block_ord * BLOCK_SIZE
-    group_end = np.repeat(g + counts, nb_per_group)
-    block_end = np.minimum(block_start + BLOCK_SIZE, group_end)
-
-    factors = bm25_tf_factor(tfs, doc_lens, avgdl)
-    bmax_all = np.maximum.reduceat(factors, block_start).astype(np.float32)
-    blast_all = doc_ids[block_end - 1].astype(np.int64)
-    bbyte = val_start[3 * block_start].astype(np.int64)
-
-    group_byte_start = val_start[3 * g]
-    group_byte_end = np.append(val_start[3 * g[1:]], enc.size) if g.size > 1 else np.array([enc.size])
-    blk_bounds = np.concatenate(([0], np.cumsum(nb_per_group)))
-
-    buf = enc.tobytes()
-    blobs, bmaxs, boffs, blasts = [], [], [], []
-    for i in range(g.size):
-        b0, b1 = int(blk_bounds[i]), int(blk_bounds[i + 1])
-        gb = int(group_byte_start[i])
-        blobs.append(buf[gb : int(group_byte_end[i])])
-        bmaxs.append(bmax_all[b0:b1])
-        boffs.append((bbyte[b0:b1] - gb).astype(np.int32))
-        blasts.append(blast_all[b0:b1])
-    return blobs, bmaxs, boffs, blasts, counts
-
-
 def pack_many_raw(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -229,7 +195,13 @@ def pack_many_raw(
     group_starts: np.ndarray,
     avgdl: float,
 ):
-    """Zero-copy form of :func:`pack_many` for Arrow output construction.
+    """Pack MANY posting lists at once — the batch-vectorized form of
+    :func:`pack_postings`, shaped for Arrow output construction.
+
+    Input: the concatenated postings of all groups (sorted by doc_id within
+    each group) plus ``group_starts`` (first row index of each group,
+    sorted, starting at 0). One varint encode covers the entire stream;
+    per-block maxima come from ``np.maximum.reduceat``.
 
     Returns a dict of flat arrays instead of per-group Python objects —
     the caller assembles ``pa.BinaryArray``/``pa.ListArray`` directly from
@@ -381,9 +353,4 @@ def unpack_positions(
     if total == 0:
         return np.empty(0, dtype=np.int64), row_off
     vals = decode_varints(buf, offset=offset, count=total).astype(np.int64)
-    # segmented cumsum (restarting at each posting) minus 1:
-    # p_0 = v_0 - 1, p_j = p_{j-1} + v_j
-    cs = np.cumsum(vals)
-    starts = row_off[:-1]
-    seg = cs - np.repeat(cs[starts] - vals[starts], tfs.astype(np.int64))
-    return seg - 1, row_off
+    return undelta_runs(vals, tfs.astype(np.int64)), row_off

@@ -10,7 +10,7 @@ stays aligned across generations.
 
 Query-side consequences (all wired):
 
-* ``load_segments``/``load_docs``/``load_flat_postings`` union the
+* ``load_segments``/``load_docs`` (and so every scorer) union the
   generations; segments gain a ``gen_avgdl`` column.
 * df: each generation's ``df_global`` counted only its own docs, so
   multi-gen queries aggregate df in-plan (the same path seg_split>1

@@ -31,6 +31,8 @@ pyarrow, sorts with integer keys (term-hash/bucket/doc_id — stable, so
 deterministic given the sorted file list), then a group-carving Arrow pass
 packs delta+varint posting bytes with per-block max-score metadata
 (operators/codec.py) and writes hive shard= segment files + manifests.
+The flat postings are only this handoff: once ``meta.json`` commits they
+are removed, and the segments are the index's one postings plane.
 Zero per-row/per-group Python objects: boundaries come from Arrow compute
 kernels and the output binary/list columns are assembled directly from the
 codec's flat buffers (the pandas/applyInPandas formulations measured
@@ -80,24 +82,10 @@ from uci_searchengine_spark import BM25_B, BM25_K1, DEFAULT_NUM_SHARDS
 from uci_searchengine_spark.functions.extract import extract_html
 from uci_searchengine_spark.functions.tokenize import tokenize_series
 from uci_searchengine_spark.operators.codec import (
-    pack_many,
     pack_many_raw,
     pack_positions_raw,
 )
 from uci_searchengine_spark.plans.docids import assign_doc_ids
-
-SEGMENT_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("df", T.IntegerType(), False),
-        T.StructField("postings", T.BinaryType(), False),
-        T.StructField("block_max", T.ArrayType(T.FloatType()), False),
-        T.StructField("block_offsets", T.ArrayType(T.IntegerType()), False),
-        T.StructField("block_last_doc", T.ArrayType(T.LongType()), False),
-    ]
-)
 
 POSTINGS_STAGE_SCHEMA = T.StructType(
     [
@@ -528,7 +516,7 @@ def _stage1_fn(
                 path = os.path.join(out_dir, f"part-{pid:05d}.parquet")
                 w = pq.ParquetWriter(path + ".tmp", schema, compression=compression)
                 writers[key] = w
-                tmp_paths.append((path + ".tmp", path))
+                tmp_paths.append((path + ".tmp", path, subdir))
             return w
 
         def process(pdf: pd.DataFrame) -> None:
@@ -628,9 +616,11 @@ def _stage1_fn(
         tbl_bytes = 0
         for w in list(docs_writers.values()) + list(post_writers.values()):
             w.close()
-        for tmp, final in tmp_paths:
+        for tmp, final, subdir in tmp_paths:
             os.replace(tmp, final)
-            tbl_bytes += os.path.getsize(final)
+            # bytes of the planes that outlive the commit: the doc store
+            if subdir == "docs":
+                tbl_bytes += os.path.getsize(final)
         _commit_manifest(
             index_dir,
             name,
@@ -680,76 +670,6 @@ def _tf_rows(it):
         )
 
 
-def _pack_partition(avgdl: float):
-    """mapInPandas packer over a shard-partitioned, (term,bucket,doc_id)-
-    sorted stream of flat postings.
-
-    Spark's groupBy().applyInPandas pays per-group Arrow/schema overhead —
-    ruinous for millions of tiny term groups. Instead we sort within the
-    shard partition and carve group boundaries ourselves: one Arrow pass,
-    numpy slicing per (term, bucket) group, a held-back tail so groups that
-    span Arrow batches are never split. Per-group Python is O(distinct
-    terms), never O(postings) — the hot per-posting work stays vectorized
-    in pack_postings.
-    """
-
-    def run(batches):
-        hold: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame, last_incomplete: bool):
-            nonlocal hold
-            terms = pdf["term"].to_numpy()
-            buckets = pdf["bucket"].to_numpy()
-            # boundaries where (term, bucket) changes
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-            )
-            starts = np.concatenate(([0], change + 1))
-            ends = np.concatenate((change + 1, [len(pdf)]))
-            if last_incomplete and len(starts):
-                hold = pdf.iloc[starts[-1] :]
-                starts, ends = starts[:-1], ends[:-1]
-            else:
-                hold = None
-            if not len(starts):
-                return None
-            cut = int(ends[-1])
-            doc_ids = pdf["doc_id"].to_numpy()[:cut]
-            tfs = pdf["tf"].to_numpy()[:cut]
-            dls = pdf["doc_len"].to_numpy()[:cut]
-            shards = pdf["shard"].to_numpy()
-            blobs, bmaxs, boffs, blasts, counts = pack_many(
-                doc_ids, tfs, dls, starts, avgdl
-            )
-            return pd.DataFrame(
-                {
-                    "shard": shards[starts].astype("int32"),
-                    "term": terms[starts],
-                    "bucket": buckets[starts].astype("int32"),
-                    "df": counts.astype("int32"),
-                    "postings": blobs,
-                    "block_max": bmaxs,
-                    "block_offsets": boffs,
-                    "block_last_doc": blasts,
-                }
-            )
-
-        for pdf in batches:
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            out = emit(pdf, last_incomplete=True)
-            if out is not None and len(out):
-                yield out
-        if hold is not None and len(hold):
-            out = emit(hold.reset_index(drop=True), last_incomplete=False)
-            if out is not None and len(out):
-                yield out
-
-    return run
-
-
 def _pack_and_write_arrow(
     index_dir: str, snapshot: str, avgdl: float, positions: bool = False
 ):
@@ -760,9 +680,8 @@ def _pack_and_write_arrow(
     the posting blobs/block arrays are assembled as a single
     ``pa.BinaryArray``/``pa.ListArray`` straight from the codec's flat
     buffers (codec.pack_many_raw), and files are written with pyarrow.
-    The pandas variant of the same dataflow (``_pack_partition`` +
-    ``_write_partition_fn``) spent ~25μs/row on object conversion — at
-    33M posting rows that dwarfed the actual packing work.
+    A pandas variant of the same dataflow spent ~25μs/row on object
+    conversion — at 33M posting rows that dwarfed the actual packing work.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1020,72 +939,6 @@ def sort_flat_postings_chunks(tbl, chunk: int = 262_144):
     tbl = tbl.take(pa.array(order))
     for lo in range(0, tbl.num_rows, chunk):
         yield tbl.slice(lo, chunk)
-
-
-def _write_partition_fn(index_dir: str, snapshot: str, kind: str, order_cols: list[str]):
-    """Returns a mapInPandas fn writing one parquet file per (partition,
-    hive-dir) with a per-partition manifest; skips committed partitions."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark import TaskContext
-
-    hive_col = "shard" if kind == "segments" else "bucket"
-
-    def write(it):
-        pid = TaskContext.get().partitionId()
-        name = f"{kind}-{pid:05d}"
-        existing = _read_manifest(index_dir, name)
-        if existing and existing.get("status") == "committed" and existing.get("input_snapshot") == snapshot:
-            # already built by a previous (killed) run — zero recompute
-            for _ in it:
-                pass
-            yield pd.DataFrame({"partition_id": [pid], "skipped": [True]})
-            return
-        rows = 0
-        tbl_bytes = 0
-        postings_total = 0
-        chunks = [pdf for pdf in it if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
-            if kind == "segments":
-                # all buckets of a term share its shard → its shard
-                # partition sees the whole posting list, so the global df
-                # is computable here with zero extra shuffle. Denormalized
-                # onto every segment row: the query path reads idf without
-                # a separate aggregation job (term_stats analog,
-                # backend/app/database/models.py:44-51 — which the
-                # reference never populates, SURVEY.md §2.9).
-                pdf["df_global"] = pdf.groupby("term")["df"].transform("sum").astype("int64")
-            for hv, grp in pdf.groupby(hive_col, sort=True):
-                out_dir = os.path.join(index_dir, kind, f"{hive_col}={hv}")
-                os.makedirs(out_dir, exist_ok=True)
-                tbl = pa.Table.from_pandas(
-                    grp.drop(columns=[hive_col]), preserve_index=False
-                )
-                path = os.path.join(out_dir, f"part-{pid:05d}.parquet")
-                pq.write_table(tbl, path + ".tmp", compression="zstd")
-                os.replace(path + ".tmp", path)
-                rows += len(grp)
-                tbl_bytes += os.path.getsize(path)
-                if kind == "segments":
-                    postings_total += int(grp["df"].sum())
-        _commit_manifest(
-            index_dir,
-            name,
-            {
-                "partition_id": pid,
-                "docs": rows if kind == "docs" else 0,
-                "postings": postings_total,
-                "bytes": tbl_bytes,
-                "rows": rows,
-                "input_snapshot": snapshot,
-                "status": "committed",
-            },
-        )
-        yield pd.DataFrame({"partition_id": [pid], "skipped": [False]})
-
-    return write
 
 
 _WRITE_RESULT_SCHEMA = T.StructType(
@@ -1445,6 +1298,7 @@ def build_index(
         bucket_size_override=bucket_size_override,
     )
     if fast is not None:
+        _remove_flat_handoff(index_dir)  # left behind by a kill after the commit
         return fast
     url_stats: list | None = None
 
@@ -1527,6 +1381,13 @@ def build_index(
     n_stage1 = len(map_groups) if map_groups is not None else write_partitions
 
     docs_stage = _read_manifest(index_dir, "stage-docs")
+    if docs_stage and not os.path.isdir(os.path.join(index_dir, "postings_flat")):
+        # a committed build's handoff is gone; with meta.json lost, stage 2
+        # can only resume from a rerun stage 1
+        for fn in os.listdir(os.path.join(index_dir, "_manifest")):
+            if fn.startswith("stage1-") or fn == "stage-docs.json":
+                os.remove(os.path.join(index_dir, "_manifest", fn))
+        docs_stage = None
     if not (
         docs_stage
         and docs_stage.get("status") == "committed"
@@ -1750,7 +1611,16 @@ def _pack_and_finalize(
     with open(tmp, "w") as f:
         f.write(meta.to_json())
     os.replace(tmp, os.path.join(index_dir, "meta.json"))
+    _remove_flat_handoff(index_dir)
     return meta
+
+
+def _remove_flat_handoff(index_dir: str) -> None:
+    """Drop the stage-1 → stage-2 flat postings of a committed index: the
+    segments hold the same postings, and no reader uses the flat copy."""
+    import shutil
+
+    shutil.rmtree(os.path.join(index_dir, "postings_flat"), ignore_errors=True)
 
 
 def generation_dirs(index_dir: str) -> list[str]:
@@ -1882,9 +1752,11 @@ def build_metrics(index_dir: str) -> dict:
             m = json.load(f)
         out["partitions"] += 1
         out["docs"] += m.get("docs", 0)
+        # manifest bytes are those of the committed planes only (docs,
+        # segments); the stage-1 flat postings are removed at the commit
         out["bytes"] += m.get("bytes", 0)
         # postings counted from the segment manifests only (the stage-1
-        # flat-postings rows are the same postings pre-compression)
+        # rows are the same postings pre-compression)
         if fn.startswith("segments-"):
             out["postings"] += m.get("postings", 0)
     return out

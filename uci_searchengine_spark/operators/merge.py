@@ -8,7 +8,8 @@ list's bytes already exist in every generation; merging them needs a
 decode → concatenate → re-delta → pack, never a tokenizer.
 
 ``merge_generations`` produces a fresh single-generation index at
-``out_dir`` from the source index's own planes:
+``out_dir`` from the source index's own planes (segments and doc store;
+there is no other postings plane to rebuild):
 
 * **segments**: one task per ``shard=`` dir reads that shard's rows from
   every generation (the shard grid is shared across generations — term →
@@ -84,29 +85,6 @@ def _drop_sorted(ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
         return np.ones(ids.size, dtype=bool)
     p = np.clip(np.searchsorted(tomb, ids), 0, tomb.size - 1)
     return tomb[p] != ids
-
-
-def _decode_binary_column(col, count: int) -> np.ndarray:
-    """Decode ``count`` varints straight out of a (large_)binary
-    column's Arrow value buffer — the buffer IS the concatenation of
-    every row's blob (each a whole number of varints), so one
-    vectorized ``decode_varints`` covers the whole column; no per-row
-    python, no per-row bytes objects."""
-    import pyarrow as pa
-
-    from uci_searchengine_spark.operators.codec import decode_varints
-
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
-    arr = col.chunk(0) if isinstance(col, pa.ChunkedArray) else col
-    width = (
-        np.int64
-        if pa.types.is_large_binary(arr.type)
-        else np.int32
-    )
-    voff = np.frombuffer(arr.buffers()[1], dtype=width)
-    start = int(voff[arr.offset])
-    return decode_varints(arr.buffers()[2], offset=start, count=count)
 
 
 def _bucket_dirs(src_dirs: list[str], sub: str) -> list[int]:
@@ -203,8 +181,11 @@ def _seg_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
         import pyarrow.parquet as pq
 
         from uci_searchengine_spark.operators.codec import (
+            decode_binary_column,
+            decode_postings_column,
             pack_many_raw,
             pack_positions_raw,
+            undelta_runs,
         )
 
         tomb = _tomb_sorted(src_index_dir)
@@ -259,24 +240,12 @@ def _seg_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
                     # doc order (append bases each gen past the parent)
                     order = np.lexsort((gen, bucket, term_codes))
 
-                    # ---- vectorized whole-shard decode: the postings
-                    # column's value buffer IS the concatenation of every
-                    # row's varint stream (each a whole number of varints,
-                    # 3·df per row), so ONE decode_varints call replaces
-                    # the per-row python loop (measured ~20× on the merge)
-                    vals = _decode_binary_column(
-                        tbl.column("postings"), 3 * int(df_col.sum())
+                    # vectorized whole-shard decode: one varint pass over
+                    # the postings column (measured ~20× the per-row loop)
+                    ids0, tf0, dl0 = decode_postings_column(
+                        tbl.column("postings"), df_col
                     )
-                    gaps = vals[0::3].astype(np.int64)
-                    tf0 = vals[1::3].astype(np.int64)
-                    dl0 = vals[2::3].astype(np.int64)
                     roff = np.concatenate(([0], np.cumsum(df_col)))
-                    # per-row delta-chain restart (first gap = doc_id + 1)
-                    cs = np.cumsum(gaps)
-                    rstart = roff[:-1]
-                    ids0 = (
-                        cs - np.repeat(cs[rstart] - gaps[rstart], df_col) - 1
-                    )
                     # gather postings in sorted-row order (multi-range take)
                     lens = df_col[order]
                     total = int(lens.sum())
@@ -305,15 +274,10 @@ def _seg_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
                     if positions:
                         # same single-pass decode for the positional plane;
                         # per-POSTING delta chains restart, counts = tf
-                        pvals = _decode_binary_column(
+                        pos0 = undelta_runs(decode_binary_column(
                             tbl.column("positions"), int(tf0.sum())
-                        ).astype(np.int64)
+                        ).astype(np.int64), tf0)
                         prow = np.concatenate(([0], np.cumsum(tf0)))
-                        pcs = np.cumsum(pvals)
-                        pst = prow[:-1]
-                        pos0 = (
-                            pcs - np.repeat(pcs[pst] - pvals[pst], tf0) - 1
-                        )
                         plens = tf0[idx]
                         pout = np.concatenate(([0], np.cumsum(plens)))
                         pidx = (
@@ -401,41 +365,6 @@ def _seg_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
                                        compression="zstd")
                         os.replace(path + ".tmp", path)
                         size = os.path.getsize(path)
-                        # flat-postings plane (score_naive / match_count
-                        # / a future re-pack read it): same survivors,
-                        # same (term, bucket, doc) order
-                        from uci_searchengine_spark.operators.index_build import (  # noqa: E501
-                            _xxh_many,
-                        )
-
-                        gterms = term_uniq.take(lt).to_numpy()
-                        gsizes = sizes[live]
-                        flat = pa.table({
-                            "term": pa.array(
-                                np.repeat(gterms, gsizes), pa.string()
-                            ),
-                            "doc_id": pa.array(ids),
-                            "tf": pa.array(tf.astype(np.int32)),
-                            "doc_len": pa.array(dl.astype(np.int32)),
-                            "th": pa.array(
-                                np.repeat(_xxh_many(gterms), gsizes)
-                            ),
-                            "shard": pa.array(
-                                np.full(ids.size, shard, dtype=np.int32)
-                            ),
-                            "bucket": pa.array(
-                                np.repeat(lb, gsizes).astype(np.int32)
-                            ),
-                        })
-                        fdir = os.path.join(
-                            out_dir, "postings_flat", f"pshard={shard}"
-                        )
-                        os.makedirs(fdir, exist_ok=True)
-                        fpath = os.path.join(fdir, f"part-{sl:05d}.parquet")
-                        pq.write_table(flat, fpath + ".tmp",
-                                       compression="zstd")
-                        os.replace(fpath + ".tmp", fpath)
-                        size += os.path.getsize(fpath)
                 _commit_manifest(out_dir, name, {
                     "partition_id": pid, "docs": 0,
                     "postings": int(post_total), "bytes": size,

@@ -60,10 +60,10 @@ from uci_searchengine_spark.operators.bm25 import (
     BM25_B,
     BM25_K1,
     _minus_tombstones,
-    load_flat_postings,
     terms_for_index,
 )
 from uci_searchengine_spark.operators.index_build import IndexMeta, load_docs
+from uci_searchengine_spark.operators.wand import decoded_postings
 
 _TAG = "_uss_tag.json"
 
@@ -212,10 +212,8 @@ def score_fields(
         return empty
     n_docs = float(meta.n_docs)
 
-    body = (
-        load_flat_postings(spark, index_dir)
-        .filter(F.col("term").isin(terms))
-        .select("term", "doc_id", F.col("tf").alias("tf_b"), "doc_len")
+    body = decoded_postings(spark, index_dir, meta, terms).select(
+        "term", "doc_id", F.col("tf").alias("tf_b"), "doc_len"
     )
     tposts, avg_tlen = title_postings_relation(spark, index_dir, meta)
     tposts = tposts.filter(F.col("term").isin(terms)).select(

@@ -283,8 +283,8 @@ class Searcher:
         block-max θ-pruning is NOT admissible (eligible docs are
         exactly the low-scored ones θ would discard), so the pruned
         serving scorer is the wrong engine for deep pages — the
-        flat-plane filter keeps page N the same bounded top-k as
-        page 1."""
+        relational cursor filter over the decoded postings keeps page N
+        the same bounded top-k as page 1."""
         from uci_searchengine_spark.operators.bm25 import search_after
 
         df = search_after(

@@ -49,7 +49,10 @@ from pyspark.sql import types as T
 from uci_searchengine_spark import BM25_B, BM25_K1
 from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
-from uci_searchengine_spark.operators.codec import unpack_postings
+from uci_searchengine_spark.operators.codec import (
+    decode_postings_column,
+    unpack_postings,
+)
 from uci_searchengine_spark.operators.index_build import (
     IndexMeta,
     load_segments,
@@ -624,6 +627,43 @@ def pruned_segments(
     )
 
 
+_DECODED_SCHEMA = "term string, doc_id long, tf int, doc_len int"
+
+
+def decoded_postings(
+    spark: SparkSession, index_dir: str, meta: IndexMeta, terms: list[str]
+) -> DataFrame:
+    """The query terms' postings as ``(term, doc_id, tf, doc_len)`` rows —
+    the relational scorers' scan: ``prune_relation``'s shard/term filter,
+    then one vectorized decode per Arrow batch."""
+    return (
+        load_segments(spark, index_dir)
+        .filter(_term_filter(meta, terms))
+        .select("term", "df", "postings")
+        .mapInArrow(_decode_batches, _DECODED_SCHEMA)
+    )
+
+
+def _decode_batches(batches):
+    import pyarrow as pa
+
+    for b in batches:
+        df = b.column("df").to_numpy()
+        ids, tf, dl = decode_postings_column(b.column("postings"), df)
+        rows = pa.array(np.repeat(np.arange(b.num_rows), df))
+        yield pa.RecordBatch.from_arrays(
+            [b.column("term").take(rows), pa.array(ids),
+             pa.array(tf.astype(np.int32)), pa.array(dl.astype(np.int32))],
+            names=["term", "doc_id", "tf", "doc_len"],
+        )
+
+
+def _term_filter(meta: IndexMeta, terms: list[str]):
+    """Hive shard-dir pruning plus the pushed term filter for ``terms``."""
+    shards = sorted(set(_shards_for_terms(terms, meta.num_shards).values()))
+    return F.col("shard").isin(shards) & F.col("term").isin(terms)
+
+
 def prune_relation(
     seg_rel: DataFrame,
     meta: IndexMeta,
@@ -634,9 +674,7 @@ def prune_relation(
     segment relation (shared by pruned_segments and the resident
     serving.Searcher, so both surfaces get identical multi-generation df
     semantics)."""
-    shard_map = _shards_for_terms(terms, meta.num_shards)
-    shards = sorted(set(shard_map.values()))
-    seg = seg_rel.filter(F.col("shard").isin(shards) & F.col("term").isin(terms))
+    seg = seg_rel.filter(_term_filter(meta, terms))
     if getattr(meta, "positions", False) and not with_positions:
         seg = seg.drop("positions", "pos_block_off")
     if getattr(meta, "seg_split", 1) > 1 or getattr(meta, "gens", 1) > 1:
