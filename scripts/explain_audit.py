@@ -5,6 +5,7 @@ plans plus PASS/FAIL assertions on the plan features that matter at scale."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 
@@ -159,6 +160,16 @@ def main() -> None:
             "naive: term IN filter pushed to the segments scan",
             "PushedFilters: [In(term" in plan,
             plan,
+        )
+    )
+    # df is summed from the segment rows, so the postings decode (a
+    # MapInArrow over the pruned rows) runs once, on the probe side
+    physical = topk._jdf.queryExecution().sparkPlan().toString()
+    checks.append(
+        (
+            "naive: one segments decode per relational scan",
+            len(re.findall(r"\bMapInArrow\b", physical)) == 1,
+            physical,
         )
     )
     # under AQE the formatted plan tags codegen stages as "[codegen id : N]"

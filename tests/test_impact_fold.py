@@ -1,5 +1,5 @@
-"""Per-block bound fold (Lucene impact-sorting analog) in the
-doc-values scorers: admissibility (per-window bounds return EXACTLY the
+"""Per-block bound fold (Lucene impact-sorting analog) of the OR
+kernel's doc-values lanes: admissibility (per-window bounds return EXACTLY the
 scalar-bound / brute-force results) and the measured skip-rate win on a
 skewed corpus — high-bonus docs and the remaining terms' postings in
 DIFFERENT windows, where the bucket-scalar bound cannot trigger early.
@@ -14,9 +14,8 @@ import pytest
 
 from uci_searchengine_spark import BM25_B, BM25_K1
 from uci_searchengine_spark.operators.codec import pack_postings
-from uci_searchengine_spark.operators.docvalues import (
-    _score_bucket_blended,
-    _score_bucket_decayed,
+from uci_searchengine_spark.operators.wand import (
+    _score_bucket,
     _term_window_ub,
     _window_max,
 )
@@ -85,8 +84,8 @@ def _skewed_case():
 
 def _run(seg, idf_map, bonus, k, per_block):
     stats = {}
-    out = _score_bucket_blended(
-        seg, idf_map, AVGDL, BUCKET, k, bonus,
+    out = _score_bucket(
+        seg, idf_map, AVGDL, BUCKET, k, bonus=bonus,
         per_block_bounds=per_block, stats=stats,
     )
     return [(int(r.doc_id), float(r.score)) for r in out.itertuples()], stats
@@ -141,8 +140,8 @@ class TestBlendedFold:
 class TestDecayedFold:
     def _run_decay(self, seg, idf_map, mult, k, per_block):
         stats = {}
-        out = _score_bucket_decayed(
-            seg, idf_map, AVGDL, BUCKET, k, mult,
+        out = _score_bucket(
+            seg, idf_map, AVGDL, BUCKET, k, mult=mult,
             per_block_bounds=per_block, stats=stats,
         )
         return [(int(r.doc_id), float(r.score)) for r in out.itertuples()], stats

@@ -45,6 +45,9 @@ class TestPlans:
         assert "TakeOrderedAndProject" in plan
         # the postings scan reads only the query terms' shard dirs
         assert re.search(r"PartitionFilters: \[[^\]]*\bshard\b", plan)
+        # df is summed from the segment rows in the JVM: the postings
+        # are decoded once, for the probe side only
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1
 
     def test_revenue_join_broadcasts_and_pushes_filter(self, spark):
         from uci_searchengine_spark.entry_queries import q_revenue_topk

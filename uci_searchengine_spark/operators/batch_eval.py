@@ -41,12 +41,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
+from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
-    _score_bucket,
-    _score_bucket_and,
+    _accumulate,
+    _bucket_topk,
+    _idf_map,
+    _mask_ids,
+    _score_mode,
+    _term_order,
     apply_per_bucket,
     load_excl,
     pruned_segments,
@@ -96,40 +100,16 @@ def _score_shared(
     excl: "np.ndarray | None",
 ) -> pd.DataFrame:
     """Exhaustive OR scoring from PRE-DECODED postings (the shared-decode
-    batch path): rows already (idf, d, tf, dl) and sorted by upper bound
-    desc — the same float-accumulation order as wand._score_bucket, so
-    scores are bit-equal to the pruned path for every returned doc."""
-    from uci_searchengine_spark import BM25_B, BM25_K1
-
+    batch path): rows (idf, d, tf, dl) in the OR kernel's upper-bound
+    term order (``wand._term_order``), accumulated by the same
+    ``wand._accumulate`` — so scores are bit-equal to the pruned path
+    for every returned doc."""
     acc = np.zeros(bucket_size, dtype=np.float64)
     for w, d, tf, dl in decoded:
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-        if not d.size:
-            continue
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
+        d, tf, dl = _mask_ids(d, tf, dl, excl)
+        _accumulate(acc, d - base, w, tf, dl, avgdl)
     nz = np.flatnonzero(acc > 0)
-    if not nz.size:
-        return pd.DataFrame(
-            {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-        )
-    scores = acc[nz]
-    if nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
+    return _bucket_topk(nz, acc[nz], k, base)
 
 
 def batch_topk(
@@ -177,100 +157,47 @@ def batch_topk(
         return empty
     union_terms = list(dict.fromkeys(t for ts in q_terms.values() for t in ts))
     seg = pruned_segments(spark, index_dir, meta, union_terms)
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
+    avgdl, bucket_size = meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
         def fn(key, seg_pdf):
             out = []
             if len(seg_pdf):
-                terms_here = set(seg_pdf["term"])
-                idf_all = {
-                    t: idf_fn(n_docs, int(d))
-                    for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-                }
-                decode_eff = decode
-                if decode == "auto":
-                    dfm = {
-                        t: int(d)
-                        for t, d in zip(
-                            seg_pdf["term"], seg_pdf["df_global"]
-                        )
-                    }
-                    decode_eff = (
-                        "shared"
-                        if mode == "or"
-                        and decode_multiplicity(q_terms, dfm)
-                        >= DECODE_AUTO_THRESHOLD
-                        else "per-query"
+                shared = decode == "shared" or (
+                    decode == "auto"
+                    and mode == "or"
+                    and decode_multiplicity(
+                        q_terms,
+                        {
+                            t: int(d)
+                            for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
+                        },
                     )
-                if decode_eff == "shared":
-                    from uci_searchengine_spark.operators.codec import (
-                        unpack_postings,
-                    )
-
+                    >= DECODE_AUTO_THRESHOLD
+                )
+                if shared:
+                    # every pruned row decodes ONCE, in the kernel's term
+                    # order; each query takes its own terms' rows in turn
                     base = int(seg_pdf["bucket"].iloc[0]) * bucket_size
-                    has_gen = "gen_avgdl" in seg_pdf.columns
-                    by_term: dict[str, list] = {}
-                    for r in seg_pdf.itertuples(index=False):
-                        w = idf_all[r.term]
-                        d, tf, dl = unpack_postings(bytes(r.postings))
-                        # same upper-bound sort key as the pruned scorer
-                        # (incl. the multi-generation avgdl inflation, so
-                        # the accumulation ORDER — and therefore the
-                        # float sum — matches bit for bit)
-                        from uci_searchengine_spark import BM25_K1
-
-                        bm = np.asarray(r.block_max, dtype=np.float64)
-                        infl = (
-                            max(1.0, avgdl / float(r.gen_avgdl))
-                            if has_gen
-                            else 1.0
-                        )
-                        ub = (
-                            w * (BM25_K1 + 1.0)
-                            * (bm.max() if bm.size else 0.0) * infl
-                        )
-                        by_term.setdefault(r.term, []).append((ub, w, d, tf, dl))
-                    for qid, ts in q_terms.items():
-                        rows = [x for t in ts for x in by_term.get(t, [])]
-                        if not rows:
-                            continue
-                        rows.sort(key=lambda x: -x[0])
+                    rows, _suf = _term_order(
+                        seg_pdf, _idf_map(meta.n_docs, seg_pdf), avgdl
+                    )
+                    decoded = [
+                        (r.term, w, *unpack_postings(bytes(r.postings)))
+                        for _ub, w, r in rows
+                    ]
+                for qid, ts in q_terms.items():
+                    if shared:
                         pdf = _score_shared(
-                            [(w, d, tf, dl) for _, w, d, tf, dl in rows],
+                            [x[1:] for x in decoded if x[0] in ts],
                             avgdl, base, bucket_size, k, excl_local,
                         )
-                        if len(pdf):
-                            pdf = pdf.copy()
-                            pdf.insert(0, "query_id", qid)
-                            out.append(pdf)
-                    if not out:
-                        return pd.DataFrame(
-                            {
-                                "query_id": pd.Series([], dtype="object"),
-                                "doc_id": pd.Series([], dtype="int64"),
-                                "score": pd.Series([], dtype="float64"),
-                            }
-                        )
-                    return pd.concat(out, ignore_index=True)
-                for qid, ts in q_terms.items():
-                    mine = [t for t in ts if t in terms_here]
-                    if not mine:
-                        continue
-                    if mode == "and" and len(mine) < len(ts):
-                        continue  # some term absent from this bucket
-                    sub = seg_pdf[seg_pdf["term"].isin(mine)]
-                    if mode == "and":
-                        pdf = _score_bucket_and(
-                            sub, idf_all, avgdl, bucket_size, len(ts), k,
-                            excl=excl_local,
-                        )
                     else:
-                        pdf = _score_bucket(
-                            sub, idf_all, avgdl, bucket_size, k, excl=excl_local
+                        pdf = _score_mode(
+                            seg_pdf[seg_pdf["term"].isin(ts)], meta, k, mode,
+                            len(ts), excl=excl_local,
                         )
                     if len(pdf):
-                        pdf = pdf.copy()
                         pdf.insert(0, "query_id", qid)
                         out.append(pdf)
             if not out:

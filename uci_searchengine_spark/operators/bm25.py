@@ -27,7 +27,11 @@ from pyspark.sql import types as T
 
 from uci_searchengine_spark import BM25_B, BM25_K1
 from uci_searchengine_spark.functions.tokenize import tokenize_py
-from uci_searchengine_spark.operators.index_build import IndexMeta, load_docs
+from uci_searchengine_spark.operators.index_build import (
+    IndexMeta,
+    load_docs,
+    load_segments,
+)
 
 
 def query_terms(query: str) -> list[str]:
@@ -145,12 +149,19 @@ def score_all(
     )
     if not terms:
         return empty
-    from uci_searchengine_spark.operators.wand import decoded_postings
+    from uci_searchengine_spark.operators.wand import _term_filter, decoded_postings
 
-    matched = decoded_postings(spark, index_dir, meta, terms)
-    # df per query term — tiny aggregate over the already-filtered postings
-    dfs = matched.groupBy("term").agg(F.count("*").alias("df"))
-    matched = matched.join(F.broadcast(dfs), "term")
+    # df per query term: the pruned segment rows' own posting counts,
+    # summed in the JVM — the postings are decoded once, for the probe side
+    dfs = (
+        load_segments(spark, index_dir)
+        .filter(_term_filter(meta, terms))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+    )
+    matched = decoded_postings(spark, index_dir, meta, terms).join(
+        F.broadcast(dfs), "term"
+    )
     idf_expr = F.log(
         (F.lit(float(meta.n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )

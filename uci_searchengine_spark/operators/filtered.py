@@ -34,16 +34,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
-    _TOPK_COUNT_SCHEMA,
+    _TOPK_DOCS_SCHEMA,
     _TOPK_SCHEMA,
-    _idf_map,
-    _score_bucket,
-    _score_bucket_and,
+    _collect_envelope,
+    _score_mode,
     load_excl,
+    make_envelope_fn,
     pruned_segments,
 )
 
@@ -107,6 +106,10 @@ def _bucketed(allowed: DataFrame, bucket_size: int) -> DataFrame:
     )
 
 
+def _incl_ids(incl_pdf: pd.DataFrame) -> np.ndarray:
+    return np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
+
+
 def _prep(spark, index_dir: str, query: str, allowed: DataFrame,
           terms: "list[str] | None" = None, excl="__load__"):
     """Shared prelude: analyze, resolve tombstones (driver array rides
@@ -153,34 +156,16 @@ def filtered_topk(
     if prep is None:
         return empty
     meta, terms, excl_arr, allowed, seg = prep
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    n_terms = len(terms)
 
     def fn(key, seg_pdf, incl_pdf):
-        if not len(seg_pdf):
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
-        incl = np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
-        idf_map = {
-            t: idf_fn(n_docs, int(d))
-            for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-        }
-        if mode == "and":
-            return _score_bucket_and(
-                seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                excl=excl_arr, incl=incl,
-            )
-        return _score_bucket(
-            seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_arr, incl=incl
+        return _score_mode(
+            seg_pdf, meta, k, mode, len(terms), excl=excl_arr,
+            incl=_incl_ids(incl_pdf),
         )
 
     per_bucket = (
         seg.groupBy("bucket")
-        .cogroup(_bucketed(allowed, bucket_size).groupBy("bucket"))
+        .cogroup(_bucketed(allowed, meta.bucket_size).groupBy("bucket"))
         .applyInPandas(fn, schema=_TOPK_SCHEMA)
     )
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -198,66 +183,29 @@ def filtered_topk_count(
     boosts: "dict[str, float] | None" = None,
 ) -> "tuple[list[tuple[int, float]], int]":
     """Envelope primitive: filtered global top-k AND the exact
-    post-filter match count from ONE Spark job (mirror of
-    wand.topk_and_count, with the inclusion cogroup). The count is the
-    OR-union (or intersection) size AMONG allowed docs — exactly what a
-    ``site:`` results page reports as total_results. ``boosts`` maps
-    analyzed terms to query-time weight multipliers (wand._idf_map)."""
+    post-filter match count from ONE Spark job: the envelope closure
+    (``wand.make_envelope_fn``, docs off) cogrouped with the inclusion
+    relation. The count is the OR-union (or intersection) size AMONG
+    allowed docs — exactly what a ``site:`` results page reports as
+    total_results. ``boosts`` maps analyzed terms to query-time weight
+    multipliers (wand._idf_map)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     prep = _prep(spark, index_dir, query, allowed, terms=terms, excl=excl)
     if prep is None:
         return [], 0
     meta, terms, excl_arr, allowed, seg = prep
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    n_terms = len(terms)
+    make_fn = make_envelope_fn(
+        meta, [], [], k, mode, len(terms), with_docs=False, boosts=boosts
+    )
 
     def fn(key, seg_pdf, incl_pdf):
-        empty = pd.DataFrame(
-            {
-                "bucket": pd.Series([], dtype="int64"),
-                "n_matched": pd.Series([], dtype="int64"),
-                "top": pd.Series([], dtype="object"),
-            }
-        )
-        if not len(seg_pdf):
-            return empty
-        incl = np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
-        idf_map = _idf_map(n_docs, seg_pdf, boosts)
-        if mode == "and":
-            pdf, n = _score_bucket_and(
-                seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                excl=excl_arr, incl=incl, count_matches=True,
-            )
-        else:
-            pdf, n = _score_bucket(
-                seg_pdf, idf_map, avgdl, bucket_size, k,
-                excl=excl_arr, incl=incl, count_matches=True,
-            )
-        if not n:
-            return empty
-        top = [
-            {"neg_score": -float(s), "doc_id": int(d)}
-            for d, s in zip(pdf["doc_id"], pdf["score"])
-        ]
-        return pd.DataFrame(
-            {
-                "bucket": pd.Series([int(seg_pdf["bucket"].iloc[0])], dtype="int64"),
-                "n_matched": pd.Series([n], dtype="int64"),
-                "top": pd.Series([top], dtype="object"),
-            }
-        )
+        return make_fn(excl_arr, _incl_ids(incl_pdf))(key, seg_pdf)
 
     per_bucket = (
         seg.groupBy("bucket")
-        .cogroup(_bucketed(allowed, bucket_size).groupBy("bucket"))
-        .applyInPandas(fn, schema=_TOPK_COUNT_SCHEMA)
+        .cogroup(_bucketed(allowed, meta.bucket_size).groupBy("bucket"))
+        .applyInPandas(fn, schema=_TOPK_DOCS_SCHEMA)
     )
-    row = per_bucket.agg(
-        F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
-        F.slice(
-            F.sort_array(F.flatten(F.collect_list("top"))), 1, k
-        ).alias("top"),
-    ).collect()[0]
-    hits = [(int(r["doc_id"]), -float(r["neg_score"])) for r in row["top"]]
-    return hits, int(row["total"])
+    rows, total = _collect_envelope(per_bucket, k)
+    return [(r["doc_id"], r["score"]) for r in rows], total

@@ -63,6 +63,7 @@ from uci_searchengine_spark.operators.index_build import (
     _write_snapshot_marker,
     generation_dirs,
 )
+from uci_searchengine_spark.operators.wand import _in_sorted
 
 _DOC_RES = ("pid int, docs long, doc_len_sum long, max_doc long, "
             "bytes long, skipped boolean")
@@ -77,14 +78,6 @@ def _tomb_sorted(index_dir: str) -> np.ndarray:
 
     t = load_tombstone_ids(index_dir)
     return np.sort(t) if t.size else np.empty(0, dtype=np.int64)
-
-
-def _drop_sorted(ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
-    """Boolean keep-mask of ``ids`` against the sorted ``tomb`` array."""
-    if not tomb.size or not ids.size:
-        return np.ones(ids.size, dtype=bool)
-    p = np.clip(np.searchsorted(tomb, ids), 0, tomb.size - 1)
-    return tomb[p] != ids
 
 
 def _bucket_dirs(src_dirs: list[str], sub: str) -> list[int]:
@@ -135,7 +128,7 @@ def _docs_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
                 if parts:
                     tbl = pa.concat_tables(parts).combine_chunks()
                     ids = tbl.column("doc_id").to_numpy()
-                    keep = _drop_sorted(ids, tomb)
+                    keep = ~_in_sorted(tomb, ids)
                     tbl = tbl.take(
                         np.flatnonzero(keep)[np.argsort(ids[keep],
                                                         kind="stable")]
@@ -270,7 +263,7 @@ def _seg_merge_fn(src_index_dir: str, src_dirs: list[str], out_dir: str,
                     assert np.all(np.diff(ids)[brk] > 0), (
                         "generation doc ranges out of order"
                     )
-                    keep = _drop_sorted(ids, tomb)
+                    keep = ~_in_sorted(tomb, ids)
                     if positions:
                         # same single-pass decode for the positional plane;
                         # per-POSTING delta chains restart, counts = tf

@@ -41,14 +41,15 @@ from uci_searchengine_spark.functions.phrase import (
     count_phrase_py,
 )
 from uci_searchengine_spark.operators.bm25 import analyze_seq
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.codec import (
     unpack_positions,
     unpack_postings,
 )
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
-    _score_bucket_and,
+    _candidate_blocks,
+    _in_sorted,
+    _score_mode,
     apply_per_bucket,
     load_excl,
     pruned_segments,
@@ -119,22 +120,15 @@ def _candidate_positions(
     offs = np.asarray(row.block_offsets, dtype=np.int64)
     pos_offs = np.asarray(row.pos_block_off, dtype=np.int64)
     lasts = np.asarray(row.block_last_doc, dtype=np.int64)
-    firsts = np.concatenate(([base - 1], lasts[:-1]))
-    lo = np.searchsorted(cand_sorted, firsts, side="right")
-    hi = np.searchsorted(cand_sorted, lasts, side="right")
-    keep = hi > lo
     out: dict[int, np.ndarray] = {}
     nblocks = len(offs)
-    for bi in np.flatnonzero(keep):
+    for bi in _candidate_blocks(lasts, cand_sorted, base):
         cnt = BLOCK_SIZE if bi < nblocks - 1 else None
         d, tf, _dl = unpack_postings(blob, offset=int(offs[bi]), count=cnt)
         if bi > 0:
             d = d + (lasts[bi - 1] + 1)
         pf, ro = unpack_positions(pos_blob, tf, offset=int(pos_offs[bi]))
-        pos = np.searchsorted(cand_sorted, d)
-        pos = np.clip(pos, 0, cand_sorted.size - 1)
-        mask = cand_sorted[pos] == d
-        for j in np.flatnonzero(mask):
+        for j in np.flatnonzero(_in_sorted(cand_sorted, d)):
             out[int(d[j])] = pf[ro[j] : ro[j + 1]]
     return out
 
@@ -280,7 +274,7 @@ def make_phrase_fn(
 
     n_terms = len(terms)
     docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
+    bucket_size = meta.bucket_size
     stem = bool(getattr(meta, "stem", False))
 
     def make_fn(excl_local):
@@ -294,17 +288,10 @@ def make_phrase_fn(
             )
             if not len(seg_pdf):
                 return out_empty
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
             # k=None: the FULL intersection — truncating before adjacency
             # verification would be wrong (a verified doc outside the raw
             # AND top-k could belong in the phrase top-k)
-            cand = _score_bucket_and(
-                seg_pdf, idf_map, avgdl, bucket_size, n_terms, k=None,
-                excl=excl_local,
-            )
+            cand = _score_mode(seg_pdf, meta, None, "and", n_terms, excl=excl_local)
             if not len(cand):
                 return out_empty
             bucket = int(seg_pdf["bucket"].iloc[0])

@@ -31,13 +31,24 @@ MaxScore/block-max family — same skipping data (per-block max score,
 last-doc fences, byte offsets) as BMW, organized term-at-a-time so every
 inner step stays a numpy vector op.
 
+This module is the one owner of the per-bucket scoring algorithm and its
+float contract. ``_score_bucket`` is the only θ-pruned OR loop (the
+doc-values scorers pass it a per-doc ``bonus``/``mult`` lane),
+``_score_bucket_and`` / ``_score_bucket_msm`` the conjunctive and
+minimum_should_match kernels, ``_score_mode`` the and/or dispatcher. The
+steps every other per-bucket scorer (batch, boolean, filtered, phrase)
+reuses are written once here: ``_accumulate`` (the BM25 contribution in
+its one operation order), ``_mask_ids`` (sorted-id tombstone/filter
+mask), ``_term_order`` (upper-bound term order with exact suffix sums)
+and ``_bucket_topk`` (tie-aware bucket top-k).
+
 Verified rank-identical against the exhaustive naive scorer and the
-single-node oracle on the full reference query set (tests/test_query.py).
+single-node oracle on the full reference query set (tests/test_query.py),
+and bit-identical to a brute-force oracle (tests/test_kernel_props.py).
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
@@ -122,6 +133,13 @@ _TOPK_SCHEMA = T.StructType(
 )
 
 
+def _empty_topk(count_matches: bool = False):
+    out = pd.DataFrame(
+        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
+    )
+    return (out, 0) if count_matches else out
+
+
 def _shards_for_terms(terms: list[str], num_shards: int) -> dict[str, int]:
     # driver-side xxhash64 (verified == F.xxhash64 in tests/test_xxhash.py)
     # — saves a Spark round-trip per query
@@ -130,29 +148,36 @@ def _shards_for_terms(terms: list[str], num_shards: int) -> dict[str, int]:
     return {t: term_shard(t, num_shards) for t in terms}
 
 
-def _decode_for_candidates(
-    blob: bytes,
-    offs: np.ndarray,
-    lasts: np.ndarray,
-    cand: np.ndarray,
-    base: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode only the blocks whose doc-id range (block_last_doc fences)
-    contains a candidate, then keep candidate docs only. The skipping
-    primitive shared by the OR path's θ-restricted phase and the AND
-    path's rarest-first intersection."""
+def _candidate_blocks(lasts: np.ndarray, cand: np.ndarray, base: int) -> np.ndarray:
+    """Indices of the postings blocks whose doc-id range (block_last_doc
+    fences) contains one of the sorted candidate ids — the block skip of
+    every candidate-restricted decode."""
     firsts = np.concatenate(([base - 1], lasts[:-1]))
     lo = np.searchsorted(cand, firsts, side="right")
     hi = np.searchsorted(cand, lasts, side="right")
-    keep = hi > lo
+    return np.flatnonzero(hi > lo)
+
+
+def _decode_row(r, cand: "np.ndarray | None", base: int):
+    """Decode one segment row's postings — fully, or (``cand``: sorted
+    candidate doc ids) only the blocks whose doc-id range contains a
+    candidate, keeping candidate docs only. The skipping primitive of the
+    OR kernel's θ-restricted phase, the AND kernel's rarest-first
+    intersection and the boolean constraint walk."""
+    blob = bytes(r.postings)
+    if cand is None:
+        return unpack_postings(blob)
+    lasts = np.asarray(r.block_last_doc, dtype=np.int64)
+    blocks = _candidate_blocks(lasts, cand, base)
     empty = np.array([], dtype=np.int64)
-    if not keep.any():
+    if not blocks.size:
         return empty, empty, empty
+    offs = np.asarray(r.block_offsets, dtype=np.int64)
     parts_d, parts_tf, parts_dl = [], [], []
     nblocks = len(offs)
     from uci_searchengine_spark import BLOCK_SIZE
 
-    for bi in np.flatnonzero(keep):
+    for bi in blocks:
         cnt = (
             BLOCK_SIZE
             if bi < nblocks - 1
@@ -169,11 +194,180 @@ def _decode_for_candidates(
     d = np.concatenate(parts_d)
     tf = np.concatenate(parts_tf)
     dl = np.concatenate(parts_dl)
-    # keep only candidate docs
-    pos = np.searchsorted(cand, d)
-    pos = np.clip(pos, 0, cand.size - 1)
-    mask = cand[pos] == d
+    mask = _in_sorted(cand, d)  # keep only candidate docs
     return d[mask], tf[mask], dl[mask]
+
+
+def _rows_by_term(seg: pd.DataFrame) -> dict[str, list]:
+    """Segment rows grouped by term, in first-seen order. In a
+    multi-generation index a boundary bucket (doc ranges spanning
+    generations) holds one row per generation for the same term: the
+    term's doc set is the UNION of its rows (disjoint doc ranges)."""
+    by_term: dict[str, list] = {}
+    for r in seg.itertuples(index=False):
+        by_term.setdefault(r.term, []).append(r)
+    return by_term
+
+
+def _in_sorted(ids: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Membership mask of ``d`` in the sorted id array ``ids``."""
+    if not ids.size:
+        return np.zeros(d.shape, dtype=bool)
+    p = np.clip(np.searchsorted(ids, d), 0, ids.size - 1)
+    return ids[p] == d
+
+
+def _mask_ids(d, tf, dl, excl=None, incl=None):
+    """Decoded postings minus the doc ids in sorted ``excl`` (tombstones,
+    boolean NOT) and, when ``incl`` is given, restricted to the sorted
+    ``incl`` (filter context — an empty ``incl`` keeps nothing)."""
+    keep = None
+    if excl is not None and excl.size:
+        keep = ~_in_sorted(excl, d)
+    if incl is not None:
+        m = _in_sorted(incl, d)
+        keep = m if keep is None else keep & m
+    if keep is None:
+        return d, tf, dl
+    return d[keep], tf[keep], dl[keep]
+
+
+def _accumulate(acc, local, w, tf, dl, avgdl: float) -> None:
+    """Add one term row's BM25 contributions into the dense bucket
+    accumulator at bucket-local ids ``local``. Every scorer goes
+    through this one expression in this one operation order, which is
+    what keeps scores bit-equal across the pruned, exhaustive, batch
+    and boolean paths."""
+    tf_f = tf.astype(np.float64)
+    contrib = w * (
+        tf_f
+        * (BM25_K1 + 1.0)
+        / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
+    )
+    np.add.at(acc, local, contrib)
+
+
+def _kth_largest(x: np.ndarray, k: int) -> float:
+    return np.partition(x, x.size - k)[x.size - k]
+
+
+def _bucket_topk(
+    nz: np.ndarray, scores: np.ndarray, k: "int | None", base: int
+) -> pd.DataFrame:
+    """One bucket's ranked (doc_id, score) rows, (score desc, doc_id
+    asc); ``k=None`` keeps every doc. Tie-aware: every doc at the k-th
+    score boundary survives the partition, so the lexsort — not
+    argpartition's arbitrary pick — decides among exact ties (the
+    rank-identity contract with score_naive and the oracle)."""
+    if k is not None and nz.size > k:
+        keep = scores >= _kth_largest(scores, k)
+        nz, scores = nz[keep], scores[keep]
+    order = np.lexsort((nz, -scores))[:k]
+    return pd.DataFrame(
+        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
+    )
+
+
+# relative headroom on every block-max upper bound: 16 float32 ulps
+# (2**-24 each) — covers the float32 rounding of the stored block_max
+# and the float64 op-order difference between bound and contribution
+_UB_SLACK = 1.0 + 2.0**-20
+
+
+def _term_order(seg: pd.DataFrame, idf_map: dict, avgdl: float):
+    """``(rows, suf)``: the segment rows as ``(ub, w, row)`` sorted by
+    whole-list upper bound ``ub = w·(k1+1)·max(block_max)`` descending
+    (stable in row order), and the exact suffix sums
+    ``suf[i] = Σ_{j>=i} ub_j``.
+
+    Multi-generation indexes carry gen_avgdl: each generation's
+    block_max was computed with ITS build avgdl, while scoring uses the
+    blended root avgdl — the bound is inflated by max(1, avgdl/gen)
+    (f = tf/(tf + c + m*dl) satisfies f_new <= f_old * avgdl_new/
+    avgdl_old when avgdl grows) so pruning stays admissible.
+
+    The returned ub carries ``_UB_SLACK``: block_max is stored float32
+    (rounded to nearest), so the raw bound can sit just BELOW the
+    contribution it bounds, and a doc tying θ EXACTLY from an unseen
+    term was pruned. The slack is applied after the sort, so the term
+    (and float-accumulation) order is the raw bound's.
+
+    The suffix sums run from the end, so the empty suffix is exactly
+    0.0: a sequential ``remaining_ub -= ub`` left a ~-1e-15 residue at
+    the final term, which bounded a doc whose score ties θ EXACTLY (the
+    k-th doc itself) one ulp below θ and dropped it from the top-k."""
+    has_gen = "gen_avgdl" in seg.columns
+    rows = []
+    for r in seg.itertuples(index=False):
+        w = idf_map[r.term]
+        bm = np.asarray(r.block_max, dtype=np.float64)
+        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
+        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
+    rows.sort(key=lambda x: -x[0])
+    rows = [(ub * _UB_SLACK, w, r) for ub, w, r in rows]
+    suf = [0.0]
+    for ub, _w, _r in reversed(rows):
+        suf.append(suf[-1] + ub)
+    suf.reverse()
+    return rows, suf
+
+
+# doc-range window of the per-block bound fold: term block metadata
+# (block_last_doc / block_max) is projected onto this fixed grid so the
+# θ-test can bound unseen/candidate docs per WINDOW instead of by one
+# bucket-wide scalar. 128 matches the codec's postings block size —
+# a dense term's blocks land ~1:1 on windows.
+_WINDOW = 128
+
+
+def _term_window_ub(
+    rows: list, base: int, bucket_size: int, window: int = _WINDOW
+) -> np.ndarray:
+    """(T, n_win) additive upper-bound grid: entry [i, j] bounds term
+    i's BM25 contribution to ANY doc in doc-range window j; 0 where the
+    term has no postings (the real per-block win — an absent term
+    contributes nothing there, where the scalar bound assumed every
+    term could land anywhere). Sound because postings are doc-sorted:
+    block b's docs lie in (block_last_doc[b-1], block_last_doc[b]], and
+    block_max bounds the per-doc contribution inside block b — folding
+    it onto every window that range overlaps can only over-cover."""
+    n_win = (bucket_size + window - 1) // window
+    grid = np.zeros((len(rows), n_win), dtype=np.float64)
+    for i, (ub_scalar, _w, r) in enumerate(rows):
+        bm = np.asarray(r.block_max, dtype=np.float64)
+        if not bm.size or ub_scalar <= 0:
+            continue
+        peak = bm.max()
+        if peak <= 0:
+            continue
+        # ub_scalar = w*(k1+1)*infl*peak → recover the per-block scale
+        vals = bm * (ub_scalar / peak)
+        last = np.asarray(r.block_last_doc, dtype=np.int64) - base
+        lo = np.empty_like(last)
+        lo[0] = 0
+        lo[1:] = last[:-1] + 1
+        wlo = lo // window
+        whi = last // window
+        g = grid[i]
+        single = wlo == whi
+        if single.any():
+            np.maximum.at(g, wlo[single], vals[single])
+        for b in np.flatnonzero(~single):
+            j0, j1 = int(wlo[b]), int(whi[b])
+            seg_slice = g[j0 : j1 + 1]
+            np.maximum(seg_slice, vals[b], out=seg_slice)
+    return grid
+
+
+def _window_max(vec: np.ndarray, n_win: int, window: int = _WINDOW) -> np.ndarray:
+    """Per-window max of a dense bucket-local vector (the in-task fold
+    of a doc-values lane onto the block grid: O(bucket_size), free next
+    to postings decode — and the dense vector is needed for the per-hit
+    values anyway, so a build-time sidecar would save no IO)."""
+    pad = n_win * window - vec.size
+    if pad:
+        vec = np.concatenate([vec, np.zeros(pad, dtype=vec.dtype)])
+    return vec.reshape(n_win, window).max(axis=1)
 
 
 def _score_bucket(
@@ -185,124 +379,112 @@ def _score_bucket(
     excl: "np.ndarray | None" = None,
     count_matches: bool = False,
     incl: "np.ndarray | None" = None,
+    bonus: "np.ndarray | None" = None,
+    mult: "np.ndarray | None" = None,
+    per_block_bounds: bool = True,
+    stats: "dict | None" = None,
 ) -> pd.DataFrame:
-    """``excl``: sorted global doc ids to EXCLUDE (boolean NOT). Applied
-    at accumulation time — before θ ever tightens — so block-max pruning
-    stays admissible for the post-exclusion top-k.
+    """θ-pruned block-max OR top-k for one bucket — the engine's one
+    disjunctive scoring loop.
 
-    ``incl``: sorted global doc ids to KEEP (filter context — only docs
-    in the set are eligible hits). Applied at the same accumulation
-    point as ``excl`` and for the same reason: masking before θ ever
-    tightens keeps the pruning admissible for the post-filter top-k.
+    ``excl``: sorted global doc ids to EXCLUDE (tombstones, boolean
+    NOT). ``incl``: sorted global doc ids to KEEP (filter context —
+    only docs in the set are eligible hits). Both are applied at
+    accumulation time — before θ ever tightens — so block-max pruning
+    stays admissible for the post-filter top-k.
 
     ``count_matches``: also return this bucket's exact matched-doc count
     as ``(pdf, n)``. Counting the OR-union's cardinality requires decoding
     every term's doc ids, so candidate restriction (which skips blocks)
     is disabled — the envelope path trades pruning for folding the
-    total_results count into the same pass (one job instead of two)."""
-    _empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")})
+    total_results count into the same pass (one job instead of two).
+
+    Per-doc lane (at most one; set by the doc-values scorers): ``bonus``
+    is a dense bucket-local additive score (final = bm25 + bonus),
+    ``mult`` a dense multiplicative factor in [0, 1] (final =
+    bm25 · mult). θ and the candidate set are maintained over the FINAL
+    scores; matching stays acc > 0 on the raw BM25 accumulator (a lane
+    is a ranking signal, not a matching signal).
+
+    Bounds (⊕ below is + for ``bonus``, · for ``mult``). With no lane an
+    unseen doc can reach at most the remaining terms' summed upper bound
+    (a bucket scalar). With a lane and ``per_block_bounds`` (the Lucene
+    impact-sorting analog) the bound is per doc-range WINDOW j — unseen
+    docs by max_j(remaining_win_ub[j] ⊕ lane_win_max[j]), candidates by
+    (acc[d] + remaining_win_ub[win(d)]) ⊕ lane[d] — where
+    remaining_win_ub sums each remaining term's folded block_max over
+    that window (0 where the term has no postings). Strictly tighter than the scalar
+    remaining_ub ⊕ max(lane) bound, which ``per_block_bounds=False``
+    keeps as the reference path: high-lane docs and the remaining terms'
+    heavy blocks are usually NOT in the same window. ``stats`` (dict)
+    collects decoded-posting counts and the candidate-trigger term for
+    skip-rate measurement."""
     if not len(seg):
-        return (_empty, 0) if count_matches else _empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-
-    # per-term data, sorted by whole-list upper bound descending.
-    # Multi-generation indexes carry gen_avgdl: each generation's
-    # block_max was computed with ITS build avgdl, while scoring uses
-    # the blended root avgdl — inflate the bound by max(1, avgdl/gen)
-    # (f = tf/(tf + c + m*dl) satisfies f_new <= f_old * avgdl_new/
-    # avgdl_old when avgdl grows) so pruning stays admissible.
-    has_gen = "gen_avgdl" in seg.columns
-    rows = []
-    for r in seg.itertuples(index=False):
-        w = idf_map[r.term]
-        bm = np.asarray(r.block_max, dtype=np.float64)
-        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
-        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
-    rows.sort(key=lambda x: -x[0])
-
+        return _empty_topk(count_matches)
+    base = int(seg["bucket"].iloc[0]) * bucket_size
+    rows, suf = _term_order(seg, idf_map, avgdl)
     acc = np.zeros(bucket_size, dtype=np.float64)
-    theta = -np.inf
-    cand: np.ndarray | None = None  # sorted candidate local ids, None = all
-    # exact suffix sums of the per-term bounds (suffix[i] = Σ_{t>=i} ub):
-    # the empty suffix is exactly 0.0. Sequential `remaining_ub -= ub`
-    # left a ~-1e-15 residue at the final term, which bounded a doc
-    # whose score ties θ EXACTLY (the k-th doc itself) one ulp below θ
-    # and dropped it from the top-k (caught by the impact-fold fuzz).
-    _suf = [0.0]
-    for _ub, _w2, _r2 in reversed(rows):
-        _suf.append(_suf[-1] + _ub)
-    _suf.reverse()
+    lane = mult if mult is not None else bonus
 
-    for _ti, (ub, w, r) in enumerate(rows):
-        remaining_ub = _suf[_ti + 1]
-        blob = bytes(r.postings)
-        offs = np.asarray(r.block_offsets, dtype=np.int64)
-        lasts = np.asarray(r.block_last_doc, dtype=np.int64)
-        bmax = np.asarray(r.block_max, dtype=np.float64)
-        if cand is None:
-            d, tf, dl = unpack_postings(blob)
-        else:
-            d, tf, dl = _decode_for_candidates(blob, offs, lasts, cand, base)
-            if d.size == 0:
-                continue
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        if incl is not None and d.size:
-            if incl.size == 0:
-                continue
-            p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-            m = incl[p] == d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        local = d - base
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, local, contrib)
+    def final(nz):
+        if mult is not None:
+            return acc[nz] * mult[nz]
+        return acc[nz] if bonus is None else acc[nz] + bonus[nz]
+
+    def cand_bound(nz, rem):
+        if np.ndim(rem):  # per-window remaining bound
+            rem = rem[nz // _WINDOW]
+        if mult is not None:
+            return (acc[nz] + rem) * mult[nz]
+        return final(nz) + rem
+
+    def unseen_bound(rem, lane_max):
+        return rem * lane_max if mult is not None else rem + lane_max
+
+    if lane is not None and per_block_bounds:
+        grid = _term_window_ub(rows, base, bucket_size)
+        rems = np.zeros((len(rows) + 1, grid.shape[1]), dtype=np.float64)
+        rems[:-1] = np.cumsum(grid[::-1], axis=0)[::-1]
+        lane_max = _window_max(lane, grid.shape[1])
+    else:
+        rems = suf
+        lane_max = 0.0 if lane is None else float(lane.max())
+
+    theta = -np.inf
+    cand: np.ndarray | None = None  # sorted candidate global ids, None = all
+    for ti, (_ub, w, r) in enumerate(rows):
+        d, tf, dl = _decode_row(r, cand, base)
+        if stats is not None:
+            stats["decoded"] = stats.get("decoded", 0) + int(d.size)
+        d, tf, dl = _mask_ids(d, tf, dl, excl, incl)
+        if not d.size:
+            continue
+        _accumulate(acc, d - base, w, tf, dl, avgdl)
 
         if count_matches:
             continue  # exact union count needs every list decoded in full
+        rem = rems[ti + 1]
         if cand is None:
             nz = np.flatnonzero(acc > 0)
             if nz.size >= k:
-                theta = np.partition(acc[nz], nz.size - k)[nz.size - k]
-            if remaining_ub < theta:
+                theta = _kth_largest(final(nz), k)
+            if np.max(unseen_bound(rem, lane_max)) < theta:
                 # unseen docs can never reach θ → restrict to candidates
-                keep_mask = acc[nz] + remaining_ub >= theta
-                cand = nz[keep_mask] + base
+                cand = nz[cand_bound(nz, rem) >= theta] + base
+                if stats is not None:
+                    stats.setdefault("trigger_term", ti)
+                    stats["cand0"] = int(cand.size)
         else:
             # tighten candidate set as θ grows
             nz = cand - base
             if nz.size >= k:
-                theta = np.partition(acc[nz], nz.size - k)[nz.size - k]
-                cand = cand[acc[nz] + remaining_ub >= theta]
+                theta = _kth_largest(final(nz), k)
+                cand = cand[cand_bound(nz, rem) >= theta]
 
     nz = np.flatnonzero(acc > 0) if cand is None else np.unique(cand - base)
     nz = nz[acc[nz] > 0]
-    n_matched = int(nz.size)
-    if nz.size == 0:
-        return (_empty, 0) if count_matches else _empty
-    scores = acc[nz]
-    if nz.size > k:
-        # tie-aware top-k: keep EVERY doc at the k-th score boundary so the
-        # final (score desc, doc_id asc) lexsort — not argpartition's
-        # arbitrary pick — decides among exact ties (rank-identity contract
-        # with score_naive/the oracle)
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    out = pd.DataFrame({"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]})
-    return (out, n_matched) if count_matches else out
+    out = _bucket_topk(nz, final(nz), k, base)
+    return (out, int(nz.size)) if count_matches else out
 
 
 def _score_bucket_and(
@@ -323,66 +505,34 @@ def _score_bucket_and(
 
     The rarest term (smallest global df) is decoded in full and defines
     the candidate set; every later list decodes ONLY the blocks whose
-    doc-id fences contain a surviving candidate (`_decode_for_candidates`)
+    doc-id fences contain a surviving candidate (`_decode_row`)
     and shrinks the set — the classic conjunctive skip-pointer walk, here
     over block-max segment metadata with numpy set steps. Cost is bounded
     by the rarest list's length, not the head term's."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
     if not len(seg) or seg["term"].nunique() < n_terms:
         # a query term with no postings in this bucket ⇒ no doc here
         # holds all terms
-        return (empty, 0) if count_matches else empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-
-    # group rows by TERM: in a multi-generation index a boundary bucket
-    # (doc ranges spanning generations) holds one row per generation for
-    # the same term — a term's doc set is the UNION of its rows, and
-    # intersecting the rows separately (disjoint doc ranges!) would
-    # wrongly empty the result
-    by_term: dict[str, list] = {}
-    for r in seg.itertuples(index=False):
-        by_term.setdefault(r.term, []).append(r)
+        return _empty_topk(count_matches)
+    base = int(seg["bucket"].iloc[0]) * bucket_size
+    # one step per TERM, not per row: intersecting a term's generation
+    # rows separately (disjoint doc ranges!) would wrongly empty the result
     groups = sorted(
-        by_term.items(), key=lambda kv: (int(kv[1][0].df_global), kv[0])
+        _rows_by_term(seg).items(), key=lambda kv: (int(kv[1][0].df_global), kv[0])
     )
     acc = np.zeros(bucket_size, dtype=np.float64)
     cand: np.ndarray | None = None
     for term, trows in groups:
-        w = idf_map[term]
         parts = []
         for r in trows:
-            blob = bytes(r.postings)
+            d, tf, dl = _decode_row(r, cand, base)
             if cand is None:
-                d, tf, dl = unpack_postings(blob)
-                if excl is not None and excl.size and d.size:
-                    p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-                    m = excl[p] != d
-                    d, tf, dl = d[m], tf[m], dl[m]
-                if incl is not None and d.size:
-                    if incl.size == 0:
-                        d = d[:0]; tf = tf[:0]; dl = dl[:0]
-                    else:
-                        # filter context: the rarest list defines the
-                        # candidate set, so masking it here filters the
-                        # whole intersection
-                        p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-                        m = incl[p] == d
-                        d, tf, dl = d[m], tf[m], dl[m]
-            else:
-                d, tf, dl = _decode_for_candidates(
-                    blob,
-                    np.asarray(r.block_offsets, dtype=np.int64),
-                    np.asarray(r.block_last_doc, dtype=np.int64),
-                    cand,
-                    base,
-                )
+                # the rarest list defines the candidate set, so masking
+                # it here filters the whole intersection
+                d, tf, dl = _mask_ids(d, tf, dl, excl, incl)
             if d.size:
                 parts.append((d, tf, dl))
         if not parts:
-            return (empty, 0) if count_matches else empty
+            return _empty_topk(count_matches)
         if len(parts) == 1:
             d, tf, dl = parts[0]
         else:
@@ -393,31 +543,12 @@ def _score_bucket_and(
             dl = np.concatenate([p[2] for p in parts])
             o = np.argsort(d, kind="stable")
             d, tf, dl = d[o], tf[o], dl[o]
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
+        _accumulate(acc, d - base, idf_map[term], tf, dl, avgdl)
         cand = d  # sorted ascending
 
     nz = cand - base
-    scores = acc[nz]
-    n_matched = int(nz.size)
-    if k is not None and nz.size > k:
-        # tie-aware boundary keep, then full (score desc, doc_id asc)
-        # lexsort — identical rank contract to the OR path
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))
-    if k is not None:
-        order = order[:k]
-    out = pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
-    return (out, n_matched) if count_matches else out
+    out = _bucket_topk(nz, acc[nz], k, base)
+    return (out, int(nz.size)) if count_matches else out
 
 
 def _score_bucket_msm(
@@ -442,59 +573,23 @@ def _score_bucket_msm(
     match count) in two dense bucket arrays. Multi-generation rows of
     one term hold disjoint doc ranges, so counting once per term GROUP
     is exact."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
     if not len(seg) or seg["term"].nunique() < m:
         # fewer distinct query terms present in this bucket than m ⇒ no
         # doc here can reach the threshold
-        return empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-    by_term: dict[str, list] = {}
-    for r in seg.itertuples(index=False):
-        by_term.setdefault(r.term, []).append(r)
+        return _empty_topk()
+    base = int(seg["bucket"].iloc[0]) * bucket_size
     acc = np.zeros(bucket_size, dtype=np.float64)
     cnt = np.zeros(bucket_size, dtype=np.int32)
-    for term, trows in by_term.items():
-        w = idf_map[term]
+    for term, trows in _rows_by_term(seg).items():
         for r in trows:
-            d, tf, dl = unpack_postings(bytes(r.postings))
-            if excl is not None and excl.size and d.size:
-                p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-                mk = excl[p] != d
-                d, tf, dl = d[mk], tf[mk], dl[mk]
-            if incl is not None and d.size:
-                if incl.size == 0:
-                    continue
-                p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-                mk = incl[p] == d
-                d, tf, dl = d[mk], tf[mk], dl[mk]
+            d, tf, dl = _mask_ids(*_decode_row(r, None, base), excl, incl)
             if not d.size:
                 continue
             local = d - base
-            tf_f = tf.astype(np.float64)
-            contrib = w * (
-                tf_f
-                * (BM25_K1 + 1.0)
-                / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-            )
-            np.add.at(acc, local, contrib)
+            _accumulate(acc, local, idf_map[term], tf, dl, avgdl)
             cnt[local] += 1  # once per term GROUP: gen doc ranges disjoint
     nz = np.flatnonzero(cnt >= m)
-    if nz.size == 0:
-        return empty
-    scores = acc[nz]
-    if k is not None and nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))
-    if k is not None:
-        order = order[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
+    return _bucket_topk(nz, acc[nz], k, base)
 
 
 def resolve_msm(spec: "int | str", n_terms: int) -> int:
@@ -546,20 +641,12 @@ def score_msm(
         return score_wand(spark, index_dir, query, k, mode="and")
     seg = pruned_segments(spark, index_dir, meta, terms)
     excl = load_excl(index_dir, spark, meta.bucket_size)
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
         def score_fn(key, seg_pdf):
-            if not len(seg_pdf):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-                )
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
             return _score_bucket_msm(
-                seg_pdf, idf_map, avgdl, bucket_size, m, k, excl=excl_local
+                seg_pdf, _idf_map(meta.n_docs, seg_pdf), meta.avgdl,
+                meta.bucket_size, m, k, excl=excl_local,
             )
 
         return score_fn
@@ -576,15 +663,39 @@ def _idf_map(
     multiplies the SAME w every block-max upper bound uses
     (``w·(k1+1)·block_max``), so θ-pruning stays admissible under
     boosts with no extra bookkeeping."""
-    if boosts:
-        return {
-            t: idf_fn(n_docs, int(d)) * boosts.get(t, 1.0)
-            for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-        }
+    boosts = boosts or {}
     return {
-        t: idf_fn(n_docs, int(d))
+        t: idf_fn(n_docs, int(d)) * boosts.get(t, 1.0)
         for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
     }
+
+
+def _score_mode(
+    seg_pdf: pd.DataFrame,
+    meta: IndexMeta,
+    k: "int | None",
+    mode: str,
+    n_terms: "int | None",
+    boosts: "dict[str, float] | None" = None,
+    excl: "np.ndarray | None" = None,
+    incl: "np.ndarray | None" = None,
+    count_matches: bool = False,
+):
+    """One bucket of a BM25 query in ``mode`` "or" or "and": the idf map
+    (with query-time boosts), then the θ-pruned OR kernel or the
+    rarest-first AND kernel. ``k=None`` (AND only) ranks every match."""
+    if not len(seg_pdf):
+        return _empty_topk(count_matches)
+    idf_map = _idf_map(meta.n_docs, seg_pdf, boosts)
+    if mode == "and":
+        return _score_bucket_and(
+            seg_pdf, idf_map, meta.avgdl, meta.bucket_size, n_terms, k,
+            excl=excl, count_matches=count_matches, incl=incl,
+        )
+    return _score_bucket(
+        seg_pdf, idf_map, meta.avgdl, meta.bucket_size, k,
+        excl=excl, count_matches=count_matches, incl=incl,
+    )
 
 
 def score_wand(
@@ -710,123 +821,15 @@ def _topk_over_segments(
     relation, then global top-k."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
         def score_fn(key, seg_pdf):
-            if not len(seg_pdf):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-                )
-            idf_map = _idf_map(n_docs, seg_pdf, boosts)
-            if mode == "and":
-                return _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k, excl=excl_local
-                )
-            return _score_bucket(seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_local)
+            return _score_mode(seg_pdf, meta, k, mode, n_terms, boosts, excl=excl_local)
 
         return score_fn
 
     per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_SCHEMA)
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-_TOPK_COUNT_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.LongType(), False),
-        T.StructField("n_matched", T.LongType(), False),
-        T.StructField(
-            "top",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        # neg_score first: sort_array(asc) then yields
-                        # (score desc, doc_id asc) — the ranking contract
-                        T.StructField("neg_score", T.DoubleType(), False),
-                        T.StructField("doc_id", T.LongType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-
-def topk_and_count(
-    seg: DataFrame,
-    meta: IndexMeta,
-    k: int,
-    mode: str = "or",
-    n_terms: int | None = None,
-    excl: "np.ndarray | None" = None,
-    boosts: "dict[str, float] | None" = None,
-) -> tuple[list[tuple[int, float]], int]:
-    """Envelope primitive: global top-k hits AND the exact total match
-    count from ONE Spark job (the envelope previously ran the scorer and
-    then a second count job over the same relation — 2× query fan-out).
-
-    Per bucket the pandas fn returns a single row
-    ``(bucket, n_matched, top[:k])``; the global step is one aggregate:
-    ``sum(n_matched)`` + flatten/sort_array/slice of ≤ n_buckets·k
-    structs — the same driver-bound data volume TakeOrderedAndProject
-    already shipped. Exact OR-union counting requires decoding every
-    term's doc ids, so the OR path scores exhaustively here (no block
-    skipping); that work replaces the old second job's full flat-postings
-    scan, strictly less total I/O."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
-
-    def make_fn(excl_local):
-        def fn(key, seg_pdf):
-            empty = pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "n_matched": pd.Series([], dtype="int64"),
-                    "top": pd.Series([], dtype="object"),
-                }
-            )
-            if not len(seg_pdf):
-                return empty
-            idf_map = _idf_map(n_docs, seg_pdf, boosts)
-            if mode == "and":
-                pdf, n = _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                    excl=excl_local, count_matches=True,
-                )
-            else:
-                pdf, n = _score_bucket(
-                    seg_pdf, idf_map, avgdl, bucket_size, k,
-                    excl=excl_local, count_matches=True,
-                )
-            if not n:
-                return empty
-            top = [
-                {"neg_score": -float(s), "doc_id": int(d)}
-                for d, s in zip(pdf["doc_id"], pdf["score"])
-            ]
-            return pd.DataFrame(
-                {
-                    "bucket": pd.Series([int(seg_pdf["bucket"].iloc[0])], dtype="int64"),
-                    "n_matched": pd.Series([n], dtype="int64"),
-                    "top": pd.Series([top], dtype="object"),
-                }
-            )
-
-        return fn
-
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_COUNT_SCHEMA)
-    row = per_bucket.agg(
-        F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
-        F.slice(
-            F.sort_array(F.flatten(F.collect_list("top"))), 1, k
-        ).alias("top"),
-    ).collect()[0]
-    hits = [(int(r["doc_id"]), -float(r["neg_score"])) for r in row["top"]]
-    return hits, int(row["total"])
 
 
 _TOPK_DOCS_SCHEMA = T.StructType(
@@ -960,34 +963,26 @@ def make_envelope_fn(
     snippet come back None): the local path scores all buckets first and
     fetches docs for the ≤k GLOBAL winners only — the distributed plan
     fetches per bucket because its tasks run in parallel and a second
-    round-trip would cost another job."""
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
+    round-trip would cost another job.
 
-    def make_fn(excl_local):
+    ``make_fn(excl_local, incl)`` also takes a bucket's sorted allowed
+    doc ids: the filter-context envelope (``filtered``) runs the same
+    closure."""
+
+    def make_fn(excl_local, incl=None):
         def fn(key, seg_pdf):
-            empty = pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "n_matched": pd.Series([], dtype="int64"),
-                    "top": pd.Series([], dtype="object"),
-                }
+            pdf, n = _score_mode(
+                seg_pdf, meta, k, mode, n_terms, boosts,
+                excl=excl_local, incl=incl, count_matches=True,
             )
-            if not len(seg_pdf):
-                return empty
-            idf_map = _idf_map(n_docs, seg_pdf, boosts)
-            if mode == "and":
-                pdf, n = _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                    excl=excl_local, count_matches=True,
-                )
-            else:
-                pdf, n = _score_bucket(
-                    seg_pdf, idf_map, avgdl, bucket_size, k,
-                    excl=excl_local, count_matches=True,
-                )
             if not n:
-                return empty
+                return pd.DataFrame(
+                    {
+                        "bucket": pd.Series([], dtype="int64"),
+                        "n_matched": pd.Series([], dtype="int64"),
+                        "top": pd.Series([], dtype="object"),
+                    }
+                )
             bucket = int(seg_pdf["bucket"].iloc[0])
             docs: dict[int, tuple[str, str, str]] = {}
             if with_docs:
@@ -1019,38 +1014,12 @@ def make_envelope_fn(
     return make_fn
 
 
-def topk_count_docs(
-    seg: DataFrame,
-    meta: IndexMeta,
-    index_dir: str,
-    display_terms: list[str],
-    k: int,
-    mode: str = "or",
-    n_terms: int | None = None,
-    excl: "np.ndarray | BucketedExcl | None" = None,
-    boosts: "dict[str, float] | None" = None,
-) -> tuple[list[dict], int]:
-    """The WHOLE search envelope from ONE Spark job.
-
-    ``topk_and_count`` folded the match count into the scoring pass;
-    this folds the doc-store fetch in too. The doc store is bucketed on
-    the SAME doc-range grid as the segments, so each scoring task reads
-    its own bucket's docs for its ≤k local winners — a task-local
-    pyarrow read with a doc_id row-group filter (the co-location pattern
-    phrase verification already uses), never a join, never a second job.
-    Returns (rows, total): rows ordered (score desc, doc_id asc) with
-    url/title/snippet attached, snippets under the reference display
-    rule (raw query forms — bm25.snippet_text)."""
-    from uci_searchengine_spark.operators.index_build import generation_dirs
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
-    make_fn = make_envelope_fn(
-        meta, docs_dirs, [t.lower() for t in display_terms], k, mode, n_terms,
-        boosts=boosts,
-    )
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_DOCS_SCHEMA)
+def _collect_envelope(per_bucket: DataFrame, k: int) -> tuple[list[dict], int]:
+    """Global step of the one-job envelope over the per-bucket
+    ``_TOPK_DOCS_SCHEMA`` rows: ``sum(n_matched)`` plus flatten/
+    sort_array/slice of ≤ n_buckets·k structs (neg_score first, so the
+    ascending sort is (score desc, doc_id asc)) — one aggregate, the
+    same driver-bound volume a TakeOrderedAndProject ships."""
     row = per_bucket.agg(
         F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
         F.slice(
@@ -1068,3 +1037,39 @@ def topk_count_docs(
         for r in row["top"]
     ]
     return rows, int(row["total"])
+
+
+def topk_count_docs(
+    seg: DataFrame,
+    meta: IndexMeta,
+    index_dir: str,
+    display_terms: list[str],
+    k: int,
+    mode: str = "or",
+    n_terms: int | None = None,
+    excl: "np.ndarray | BucketedExcl | None" = None,
+    boosts: "dict[str, float] | None" = None,
+) -> tuple[list[dict], int]:
+    """The WHOLE search envelope from ONE Spark job: the match count
+    and the doc-store fetch are folded into the scoring pass. The doc
+    store is bucketed on the SAME doc-range grid as the segments, so each
+    scoring task reads its own bucket's docs for its ≤k local winners — a
+    task-local pyarrow read with a doc_id row-group filter (the
+    co-location pattern phrase verification already uses), never a join,
+    never a second job. Exact OR-union counting decodes every term's doc
+    ids, so the OR path scores exhaustively here (no block skipping).
+    Returns (rows, total): rows ordered (score desc, doc_id asc) with
+    url/title/snippet attached, snippets under the reference display
+    rule (raw query forms — bm25.snippet_text)."""
+    from uci_searchengine_spark.operators.index_build import generation_dirs
+
+    if mode not in ("or", "and"):
+        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
+    make_fn = make_envelope_fn(
+        meta, docs_dirs, [t.lower() for t in display_terms], k, mode, n_terms,
+        boosts=boosts,
+    )
+    return _collect_envelope(
+        apply_per_bucket(seg, excl, make_fn, _TOPK_DOCS_SCHEMA), k
+    )
